@@ -83,11 +83,3 @@ def partition_number_py(id_: int, type_: str) -> int:
 
 def pair_to_long_py(id_: int, type_: str) -> int:
     return (id_ << 2) | TYPE_CODES[type_]
-
-
-def long_to_id_py(packed: int) -> int:
-    return packed >> 2
-
-
-def long_to_type_py(packed: int) -> str:
-    return CODE_TYPES[packed & 3]

@@ -702,161 +702,182 @@ def _minhash_pairs_fused(docs: DataFrame, num_perm: int, bands: int,
         )
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    from concurrent.futures import ThreadPoolExecutor
-    _pool = ThreadPoolExecutor(max_workers=1)
-    _cells_fut = _pool.submit(lambda: cells_plan.localCheckpoint(eager=True))
+    import uuid
+    from concurrent.futures import ThreadPoolExecutor, wait
+    sc = spark.sparkContext
+    # a job TAG, not a job group: the thread's jobs stay group-less, so
+    # callers that attribute group-less jobs by submission time still see
+    # them, and the tag alone is enough to cancel them
+    cells_tag = f"minhash-cells-{uuid.uuid4().hex}"
 
-    # Scale-adaptive verify-state build (guide §2: adapt to input size,
-    # not to one tuned scale).  Below ~32 MiB of estimated shingle
-    # bytes the whole corpus CSR collects in one cheap Arrow pull and
-    # the serial rank/bitset build is sub-100 ms — the two distributed
-    # dictionary/pack jobs would cost MORE than they save (measured
-    # +0.4 s at the 5k-doc contract corpus).  Above it, the dictionary
-    # and rank/pack work runs executor-side and the driver's serial
-    # section shrinks to an argsort gather (the round-5 serial rank
-    # build was 16-22 s at 200k docs).
-    driver_build = est_bytes is not None and est_bytes <= _DRIVER_BUILD_BYTES
-    dict_tbl = None
-    if not driver_build:
-        # distributed dictionary: explode + distinct runs with map-side
-        # partial aggregation, so the shuffle carries ~per-partition-
-        # unique hashes and the driver receives exactly the n_ranks
-        # sorted uniques — never the 2x-bigger raw CSR of round 5
-        dict_tbl = (
-            combined.select(F.explode("hashes").alias("h")).distinct().toArrow()
-        )
-        if _dbg:
-            print(f"# mh_fused dict_distinct: {_time.time()-_t0:.1f}s "
-                  f"(n_ranks={dict_tbl.num_rows})",
-                  file=_sys.stderr); _t0 = _time.time()
-        # dictionary alone would blow the broadcast budget (a corpus of
-        # near-unique shingles): fall back to the driver-side build,
-        # which is no worse there
-        driver_build = dict_tbl.num_rows * 8 > budget
+    def _materialize_cells():
+        sc.addJobTag(cells_tag)
+        try:
+            return cells_plan.localCheckpoint(eager=True)
+        finally:
+            sc.removeJobTag(cells_tag)
 
-    if driver_build:
-        # round-5 driver-side path, with its documented sizing assert
-        tbl = combined.select("doc_id", "hashes").toArrow()
-        ids = tbl["doc_id"].combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
-        hcol = tbl["hashes"].combine_chunks()
-        cnts = np.asarray(hcol.value_lengths(), dtype=np.int64)
-        hv_all = hcol.flatten().to_numpy(zero_copy_only=False).astype(np.uint64)
-        # Driver sizing: this path transiently holds the Arrow table,
-        # the int64 hash buffer, its sort copy, and the two int32 rank
-        # buffers before the broadcast ships — ~2.5x the budgeted bytes
-        # peak (the rank build is chunk-bounded, see
-        # _sorted_csr_from_arrow).  Assert loudly instead of letting a
-        # mis-set budget OOM the driver mid-broadcast.
-        csr_bytes = int(hv_all.nbytes)
-        assert csr_bytes <= 4 * DEFAULT_MAX_SHINGLE_BROADCAST_BYTES, (
-            f"fused minhash CSR is {csr_bytes >> 20} MiB on the driver — "
-            "max_shingle_broadcast_bytes is set past what driver memory can "
-            "absorb (peak ~2.5x CSR bytes); lower the budget to route to the "
-            "distributed verify"
-        )
-        ids_s, ranks_s, offs_s, cnts_s, n_ranks = _sorted_csr_from_arrow(ids, hv_all, cnts)
-        del tbl, hcol, hv_all, ids, cnts
-        route = _fused_verify_route(len(ids_s), n_ranks, budget)
-        if route == "bitset":
-            bitmat = _bitset_from_csr(ranks_s, offs_s, cnts_s, n_ranks)
-            del ranks_s, offs_s
-            bc = spark.sparkContext.broadcast((ids_s, bitmat, cnts_s))
-        else:
-            bc = spark.sparkContext.broadcast((ids_s, ranks_s, offs_s, cnts_s, n_ranks))
-        if _dbg:
-            print(f"# mh_fused driver_build({route}): {_time.time()-_t0:.1f}s",
-                  file=_sys.stderr); _t0 = _time.time()
-    else:
-        n_ranks = dict_tbl.num_rows
-        dict64 = np.sort(
-            dict_tbl["h"].combine_chunks()
-            .to_numpy(zero_copy_only=False).astype(np.int64).view(np.uint64)
-        )
-        del dict_tbl
-        bcd = spark.sparkContext.broadcast(dict64)
-        route = _fused_verify_route(n_docs, n_ranks, budget)
-        w_words = (n_ranks + 63) >> 6
-
-        if route == "bitset":
-            def pack_kernel(it):
-                d = bcd.value
-                nr = len(d)
-                for pdf in it:
-                    n = len(pdf)
-                    if n == 0:
-                        yield pd.DataFrame({
-                            "doc_id": pd.Series([], dtype="int64"),
-                            "words": pd.Series([], dtype="object"),
-                            "cnt": pd.Series([], dtype="int64"),
-                        })
-                        continue
-                    segs = [np.asarray(x, dtype=np.int64) for x in pdf["hashes"]]
-                    cnts = np.fromiter((len(s) for s in segs), dtype=np.int64, count=n)
-                    flat = np.concatenate(segs)
-                    ranks = np.searchsorted(d, flat.view(np.uint64)).astype(np.int32)
-                    offs = np.concatenate([[0], np.cumsum(cnts)[:-1]]).astype(np.int64)
-                    words = _bitset_from_csr(ranks, offs, cnts, nr).view(np.int64)
-                    yield pd.DataFrame({
-                        "doc_id": pdf["doc_id"].to_numpy(dtype=np.int64),
-                        "words": list(words),
-                        "cnt": cnts,
-                    })
-
-            packed = combined.select("doc_id", "hashes").mapInPandas(
-                pack_kernel, "doc_id long, words array<long>, cnt long"
-            ).toArrow()
-            ids = packed["doc_id"].combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
-            wcol = packed["words"].combine_chunks()
-            bitflat = wcol.flatten().to_numpy(zero_copy_only=False).astype(np.int64).view(np.uint64)
-            cnts = packed["cnt"].combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
-            order = np.argsort(ids, kind="stable")
-            bitmat = bitflat.reshape(len(ids), w_words)[order]
-            bc = spark.sparkContext.broadcast((ids[order], bitmat, cnts[order]))
+    _pool = ThreadPoolExecutor(max_workers=1, thread_name_prefix="minhash-cells")
+    _cells_fut = _pool.submit(_materialize_cells)
+    try:
+        # Scale-adaptive verify-state build (guide §2: adapt to input size,
+        # not to one tuned scale).  Below ~32 MiB of estimated shingle
+        # bytes the whole corpus CSR collects in one cheap Arrow pull and
+        # the serial rank/bitset build is sub-100 ms — the two distributed
+        # dictionary/pack jobs would cost MORE than they save (measured
+        # +0.4 s at the 5k-doc contract corpus).  Above it, the dictionary
+        # and rank/pack work runs executor-side and the driver's serial
+        # section shrinks to an argsort gather (the round-5 serial rank
+        # build was 16-22 s at 200k docs).
+        driver_build = est_bytes is not None and est_bytes <= _DRIVER_BUILD_BYTES
+        dict_tbl = None
+        if not driver_build:
+            # distributed dictionary: explode + distinct runs with map-side
+            # partial aggregation, so the shuffle carries ~per-partition-
+            # unique hashes and the driver receives exactly the n_ranks
+            # sorted uniques — never the 2x-bigger raw CSR of round 5
+            dict_tbl = (
+                combined.select(F.explode("hashes").alias("h")).distinct().toArrow()
+            )
             if _dbg:
-                print(f"# mh_fused pack_collect(bitset): {_time.time()-_t0:.1f}s "
-                      f"({bitmat.nbytes >> 20} MiB, n_ranks={n_ranks})",
+                print(f"# mh_fused dict_distinct: {_time.time()-_t0:.1f}s "
+                      f"(n_ranks={dict_tbl.num_rows})",
+                      file=_sys.stderr); _t0 = _time.time()
+            # dictionary alone would blow the broadcast budget (a corpus of
+            # near-unique shingles): fall back to the driver-side build,
+            # which is no worse there
+            driver_build = dict_tbl.num_rows * 8 > budget
+
+        if driver_build:
+            # round-5 driver-side path, with its documented sizing assert
+            tbl = combined.select("doc_id", "hashes").toArrow()
+            ids = tbl["doc_id"].combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
+            hcol = tbl["hashes"].combine_chunks()
+            cnts = np.asarray(hcol.value_lengths(), dtype=np.int64)
+            hv_all = hcol.flatten().to_numpy(zero_copy_only=False).astype(np.uint64)
+            # Driver sizing: this path transiently holds the Arrow table,
+            # the int64 hash buffer, its sort copy, and the two int32 rank
+            # buffers before the broadcast ships — ~2.5x the budgeted bytes
+            # peak (the rank build is chunk-bounded, see
+            # _sorted_csr_from_arrow).  Assert loudly instead of letting a
+            # mis-set budget OOM the driver mid-broadcast.
+            csr_bytes = int(hv_all.nbytes)
+            assert csr_bytes <= 4 * budget, (
+                f"fused minhash CSR is {csr_bytes >> 20} MiB on the driver — "
+                "max_shingle_broadcast_bytes is set past what driver memory can "
+                "absorb (peak ~2.5x CSR bytes); lower the budget to route to the "
+                "distributed verify"
+            )
+            ids_s, ranks_s, offs_s, cnts_s, n_ranks = _sorted_csr_from_arrow(ids, hv_all, cnts)
+            del tbl, hcol, hv_all, ids, cnts
+            route = _fused_verify_route(len(ids_s), n_ranks, budget)
+            if route == "bitset":
+                bitmat = _bitset_from_csr(ranks_s, offs_s, cnts_s, n_ranks)
+                del ranks_s, offs_s
+                bc = spark.sparkContext.broadcast((ids_s, bitmat, cnts_s))
+            else:
+                bc = spark.sparkContext.broadcast((ids_s, ranks_s, offs_s, cnts_s, n_ranks))
+            if _dbg:
+                print(f"# mh_fused driver_build({route}): {_time.time()-_t0:.1f}s",
                       file=_sys.stderr); _t0 = _time.time()
         else:
-            def rank_kernel(it):
-                d = bcd.value
-                for pdf in it:
-                    n = len(pdf)
-                    if n == 0:
+            n_ranks = dict_tbl.num_rows
+            dict64 = np.sort(
+                dict_tbl["h"].combine_chunks()
+                .to_numpy(zero_copy_only=False).astype(np.int64).view(np.uint64)
+            )
+            del dict_tbl
+            bcd = spark.sparkContext.broadcast(dict64)
+            route = _fused_verify_route(n_docs, n_ranks, budget)
+            w_words = (n_ranks + 63) >> 6
+
+            if route == "bitset":
+                def pack_kernel(it):
+                    d = bcd.value
+                    nr = len(d)
+                    for pdf in it:
+                        n = len(pdf)
+                        if n == 0:
+                            yield pd.DataFrame({
+                                "doc_id": pd.Series([], dtype="int64"),
+                                "words": pd.Series([], dtype="object"),
+                                "cnt": pd.Series([], dtype="int64"),
+                            })
+                            continue
+                        segs = [np.asarray(x, dtype=np.int64) for x in pdf["hashes"]]
+                        cnts = np.fromiter((len(s) for s in segs), dtype=np.int64, count=n)
+                        flat = np.concatenate(segs)
+                        ranks = np.searchsorted(d, flat.view(np.uint64)).astype(np.int32)
+                        offs = np.concatenate([[0], np.cumsum(cnts)[:-1]]).astype(np.int64)
+                        words = _bitset_from_csr(ranks, offs, cnts, nr).view(np.int64)
                         yield pd.DataFrame({
-                            "doc_id": pd.Series([], dtype="int64"),
-                            "ranks": pd.Series([], dtype="object"),
+                            "doc_id": pdf["doc_id"].to_numpy(dtype=np.int64),
+                            "words": list(words),
+                            "cnt": cnts,
                         })
-                        continue
-                    yield pd.DataFrame({
-                        "doc_id": pdf["doc_id"].to_numpy(dtype=np.int64),
-                        "ranks": [
-                            np.searchsorted(
-                                d, np.asarray(x, dtype=np.int64).view(np.uint64)
-                            ).astype(np.int32)
-                            for x in pdf["hashes"]
-                        ],
-                    })
 
-            packed = combined.select("doc_id", "hashes").mapInPandas(
-                rank_kernel, "doc_id long, ranks array<int>"
-            ).toArrow()
-            ids = packed["doc_id"].combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
-            rcol = packed["ranks"].combine_chunks()
-            cnts = np.asarray(rcol.value_lengths(), dtype=np.int64)
-            rflat = rcol.flatten().to_numpy(zero_copy_only=False).astype(np.int32)
-            ids_s, ranks_s, offs_s, cnts_s = _reorder_csr(ids, rflat, cnts)
-            bc = spark.sparkContext.broadcast((ids_s, ranks_s, offs_s, cnts_s, n_ranks))
-            if _dbg:
-                print(f"# mh_fused pack_collect(csr): {_time.time()-_t0:.1f}s "
-                      f"({rflat.nbytes >> 20} MiB ranks)",
-                      file=_sys.stderr); _t0 = _time.time()
-        bcd.destroy()
-    if _dbg:
-        print(f"# mh_fused broadcast: {_time.time()-_t0:.1f}s",
-              file=_sys.stderr); _t0 = _time.time()
+                packed = combined.select("doc_id", "hashes").mapInPandas(
+                    pack_kernel, "doc_id long, words array<long>, cnt long"
+                ).toArrow()
+                ids = packed["doc_id"].combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
+                wcol = packed["words"].combine_chunks()
+                bitflat = wcol.flatten().to_numpy(zero_copy_only=False).astype(np.int64).view(np.uint64)
+                cnts = packed["cnt"].combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
+                order = np.argsort(ids, kind="stable")
+                bitmat = bitflat.reshape(len(ids), w_words)[order]
+                bc = spark.sparkContext.broadcast((ids[order], bitmat, cnts[order]))
+                if _dbg:
+                    print(f"# mh_fused pack_collect(bitset): {_time.time()-_t0:.1f}s "
+                          f"({bitmat.nbytes >> 20} MiB, n_ranks={n_ranks})",
+                          file=_sys.stderr); _t0 = _time.time()
+            else:
+                def rank_kernel(it):
+                    d = bcd.value
+                    for pdf in it:
+                        n = len(pdf)
+                        if n == 0:
+                            yield pd.DataFrame({
+                                "doc_id": pd.Series([], dtype="int64"),
+                                "ranks": pd.Series([], dtype="object"),
+                            })
+                            continue
+                        yield pd.DataFrame({
+                            "doc_id": pdf["doc_id"].to_numpy(dtype=np.int64),
+                            "ranks": [
+                                np.searchsorted(
+                                    d, np.asarray(x, dtype=np.int64).view(np.uint64)
+                                ).astype(np.int32)
+                                for x in pdf["hashes"]
+                            ],
+                        })
 
-    cells = _cells_fut.result()
-    _pool.shutdown(wait=False)
+                packed = combined.select("doc_id", "hashes").mapInPandas(
+                    rank_kernel, "doc_id long, ranks array<int>"
+                ).toArrow()
+                ids = packed["doc_id"].combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
+                rcol = packed["ranks"].combine_chunks()
+                cnts = np.asarray(rcol.value_lengths(), dtype=np.int64)
+                rflat = rcol.flatten().to_numpy(zero_copy_only=False).astype(np.int32)
+                ids_s, ranks_s, offs_s, cnts_s = _reorder_csr(ids, rflat, cnts)
+                bc = spark.sparkContext.broadcast((ids_s, ranks_s, offs_s, cnts_s, n_ranks))
+                if _dbg:
+                    print(f"# mh_fused pack_collect(csr): {_time.time()-_t0:.1f}s "
+                          f"({rflat.nbytes >> 20} MiB ranks)",
+                          file=_sys.stderr); _t0 = _time.time()
+            bcd.destroy()
+        if _dbg:
+            print(f"# mh_fused broadcast: {_time.time()-_t0:.1f}s",
+                  file=_sys.stderr); _t0 = _time.time()
+
+        cells = _cells_fut.result()
+    except BaseException:
+        # a failed verify-state build must not leave the overlapped
+        # cells job running or its thread alive
+        sc.cancelJobsWithTag(cells_tag)
+        wait([_cells_fut])
+        raise
+    finally:
+        _pool.shutdown(wait=True)
     if _dbg:
         print(f"# mh_fused cells_join: {_time.time()-_t0:.1f}s",
               file=_sys.stderr); _t0 = _time.time()

@@ -1,8 +1,8 @@
 """The per-minutely-batch augmented-diff pipeline (the engine's core DAG).
 
 Spark-first inversion of the reference's driver loop
-(/root/reference/ad/src/main/scala/AugmentedDiff.scala:47-93 + osc2json):
-every stage is a DataFrame op —
+(reference AugmentedDiff.scala:47-93 + osc2json): every stage is a
+DataFrame op —
 
   change batch ──┬─ incremental closure (iterative join fixpoint)
                  │        │ new edges → index table (snapshot append)
@@ -10,8 +10,9 @@ every stage is a DataFrame op —
                  ├─ point-lookup semi-join into clustered state (J1)
                  ├─ union + provenance-preserving dedup (J6/T5)
                  ├─ histories: windows + quantifier aggregates (A2/G2)
-                 ├─ per-mode geometry WKB (Arrow kernels, G1/G3/G6)
-                 └─ feature emission (G8) → line-delimited GeoJSON
+                 ├─ one mode-tagged way/relation WKB table (Arrow kernels, G1/G3/G6)
+                 └─ feature emission (G8): one join + one kernel
+                          → line-delimited GeoJSON
 
 State/index/lineage/metrics are snapshot-committed tables; the batch's
 own rows append to state AFTER the diff is computed (the diff joins the
@@ -23,7 +24,6 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,31 +34,23 @@ from ..sources.catalog import SnapshotTable
 from ..sources.state import StateTable
 from .lineage import LineageLog, StageTimer
 
-TYPE_ORDER = {"node": 0, "way": 1, "relation": 2}
-
-
-class _NullTimer:
-    def time(self, stage: str, record_to_log: bool = True):
-        import contextlib
-
-        return contextlib.nullcontext()
-
 
 def compute_batch_features(
     spark: SparkSession,
     state: StateTable,
     index: SnapshotTable,
     batch_df: DataFrame,
-    timer=None,
-) -> tuple[DataFrame, DataFrame]:
-    """(features_df, new_edges_df) for one change batch (no writes).
+    timer: StageTimer,
+) -> tuple[DataFrame, DataFrame, list | None]:
+    """(features_df, new_edges_df, new_edge_rows) for one change batch
+    (no writes).  ``features_df`` is lazy: its one emission pass runs
+    where the caller materializes it.
 
-    ``timer`` (a lineage.StageTimer) splits the diff into closure /
-    histories / render sub-stages in the metrics table — the per-batch
-    latency breakdown a minutely deployment watches.  Boundaries sit at
-    the eager checkpoints, so each window measures the jobs it claims.
+    ``timer`` splits the diff into closure / histories / render
+    sub-stages in the metrics table — the per-batch latency breakdown a
+    minutely deployment watches.  Boundaries sit at the eager
+    checkpoints, so each window measures the jobs it claims.
     """
-    timer = timer or _NullTimer()
     with timer.time("closure"):
         index_df = index.read(spark, schema=INDEX_SCHEMA)
         new_edges, all_edges, fetch_keys, new_edge_rows = incremental_closure(
@@ -97,68 +89,20 @@ def compute_batch_features(
         nh, wh, rh, present = history.all_histories(rows, present_hint=present_hint)
 
     with timer.time("render"):
-        # node_points is a pure projection over the CHECKPOINTED nh; its
-        # own eager checkpoint only pays off when the way/relation render
-        # chains consume it repeatedly (explode joins + both WKB modes).
-        # For the common node-only minutely batch its consumers are two
-        # lazy point-WKB projections folded into the emit job — skipping
-        # the checkpoint makes the render stage zero jobs there.
-        node_pts = render.node_points(nh)
+        # one mode-tagged (etype, id, mode, wkb) table for the batch's
+        # ways and relations (nodes render from their own coordinates at
+        # emission).  Types the batch does not touch are skipped from
+        # all_histories' presence set, with no probe job, so a node-only
+        # batch runs no render job at all.
+        geoms = spark.createDataFrame([], render.GEOM_SCHEMA)
         if present & {"way", "relation"}:
-            node_pts = node_pts.localCheckpoint(eager=True)
-        empty_wkb = spark.createDataFrame([], "id long, wkb binary")
-        # per-type skip (driven by all_histories' one presence probe —
-        # no per-frame isEmpty jobs): most minutely batches touch no
-        # relation, node-only batches touch no way; each skipped mode
-        # skips an explode/join/agg/kernel chain + its checkpoint
-        if "way" in present:
-            # both way render modes in ONE explode/join/agg/kernel pass,
-            # then filter the single checkpointed result per mode —
-            # halves the heaviest per-batch chain (each mode previously
-            # paid its own explode + broadcast join + sort-collect +
-            # Arrow kernel + eager checkpoint, serialized back-to-back)
-            way_both = render.way_wkbs_both(wh, node_pts).localCheckpoint(eager=True)
-            way_a = way_both.filter(F.col("mode") == "a").select("id", "wkb")
-            way_b = way_both.filter(F.col("mode") == "b").select("id", "wkb")
-        else:
-            way_a, way_b = empty_wkb, empty_wkb
-        if "relation" in present:
-            rel_a = render.relation_wkbs(rh, node_pts, way_a, "after")
-            rel_b = render.relation_wkbs(rh, node_pts, way_b, "before")
-        else:
-            rel_a, rel_b = empty_wkb, empty_wkb
-
-        node_a = _point_wkbs(node_pts, "ax", "ay")
-        node_b = _point_wkbs(node_pts, "bx", "by")
-
-        feats = (
-            render.emit_features(nh, node_a, node_b, "node")
-            .unionByName(render.emit_features(wh, way_a, way_b, "way"))
-            .unionByName(render.emit_features(rh, rel_a, rel_b, "relation"))
-        )
+            node_pts = render.node_points(nh).localCheckpoint(eager=True)
+            if "way" in present:
+                geoms = render.way_wkbs(wh, node_pts).localCheckpoint(eager=True)
+            if "relation" in present:
+                geoms = geoms.unionByName(render.relation_wkbs(rh, node_pts, geoms))
+        feats = render.emit_features(nh, wh, rh, geoms)
     return feats, new_edges, new_edge_rows
-
-
-def _point_wkbs(node_pts: DataFrame, xcol: str, ycol: str) -> DataFrame:
-    pts = node_pts.select("id", F.col(xcol).alias("x"), F.col(ycol).alias("y")).filter(
-        F.col("x").isNotNull()
-    )
-
-    def kernel(it):
-        from ..geometry import core, wkb
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "wkb": [
-                        wkb.dumps(core.Point(float(x), float(y)))
-                        for x, y in zip(pdf["x"], pdf["y"])
-                    ],
-                }
-            )
-
-    return pts.mapInPandas(kernel, "id long, wkb binary")
 
 
 def run_batch(

@@ -154,8 +154,10 @@ class LineageLog:
         # folded in (the compaction summary below persists the FULL set
         # as ranges); first call on a resumed log loads it — from the
         # manifest when a ranges summary exists, O(manifest), see
-        # committed_seqs
+        # committed_seqs.  An unloaded cache here would persist a partial
+        # committed set as the compaction's ranges summary — fail first.
         self.committed_seqs(spark)
+        assert self._committed_cache is not None, "committed-seq cache not loaded before commit"
         self._pending_lineage.append(
             (seq, COMMIT_STAGE, -1, snapshots.get("state"), snapshots.get("index"), None)
         )
@@ -167,8 +169,7 @@ class LineageLog:
             summary={"seq": seq, "stage": COMMIT_STAGE},
         )
         self._pending_lineage = []
-        if self._committed_cache is not None:
-            self._committed_cache.add(seq)
+        self._committed_cache.add(seq)
         # Metrics flush on the save_interval cadence, not per batch: the
         # lineage append (above) is the COMMIT — it must be durable every
         # batch for resume — but metrics are observability, and on a host
@@ -192,7 +193,7 @@ class LineageLog:
             spark, self.save_interval, self.keep_snapshots,
             schema=LINEAGE_SCHEMA,
             summary={"seq": seq,
-                     "committed_ranges": _encode_ranges(self._committed_cache or set())},
+                     "committed_ranges": _encode_ranges(self._committed_cache)},
         )
         return snap
 

@@ -50,20 +50,14 @@ def build_polygon_layer(
     rel_hist = _as_hist(latest.filter(F.col("type") == "relation"))
 
     node_pts = render.node_points(node_hist).localCheckpoint(eager=True)
-    way_w = render.way_wkbs(way_hist, node_pts, "after").localCheckpoint(eager=True)
-    rel_w = render.relation_wkbs(rel_hist, node_pts, way_w, "after")
-
-    ways = way_w.select(
-        pair_to_long(F.col("id"), F.lit("way")).alias("feature_id"),
-        F.lit("way").alias("kind"),
+    # before_row is null throughout, so only mode-a geometries appear
+    ways = render.way_wkbs(way_hist, node_pts).localCheckpoint(eager=True)
+    rels = render.relation_wkbs(rel_hist, node_pts, ways)
+    feats = ways.unionByName(rels).filter(F.col("wkb").isNotNull()).select(
+        pair_to_long(F.col("id"), F.col("etype")).alias("feature_id"),
+        F.col("etype").alias("kind"),
         F.col("wkb").alias("geom_wkb"),
     )
-    rels = rel_w.select(
-        pair_to_long(F.col("id"), F.lit("relation")).alias("feature_id"),
-        F.lit("relation").alias("kind"),
-        F.col("wkb").alias("geom_wkb"),
-    )
-    feats = ways.unionByName(rels).filter(F.col("geom_wkb").isNotNull())
 
     def kernel(it):
         for pdf in it:

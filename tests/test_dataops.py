@@ -122,6 +122,34 @@ def test_minhash_verify_route_parity(spark, docs, monkeypatch):
     assert len(bitset) > 0
 
 
+def test_minhash_failed_verify_build_leaks_no_job_or_thread(spark, docs, monkeypatch):
+    """A failure while the fused verify state builds must cancel the
+    overlapped bucket→cells job and shut its driver thread down."""
+    import threading
+    import time
+
+    import augdiff_pipeline_spark.operators.dedup as dd
+
+    def pool_threads():
+        return {t.ident for t in threading.enumerate()
+                if t.name.startswith(("minhash-cells", "ThreadPoolExecutor"))}
+
+    before = pool_threads()
+
+    def boom(*a, **kw):
+        raise RuntimeError("injected verify-route failure")
+
+    monkeypatch.setattr(dd, "_fused_verify_route", boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        minhash_lsh_pairs(docs, jaccard_threshold=0.5)
+    assert pool_threads() <= before
+    tracker = spark.sparkContext.statusTracker()
+    deadline = time.time() + 30  # job-end events reach the tracker asynchronously
+    while tracker.getActiveJobsIds() and time.time() < deadline:
+        time.sleep(0.1)
+    assert tracker.getActiveJobsIds() == []
+
+
 def test_batch_shingles_match_per_doc():
     from augdiff_pipeline_spark.operators.dedup import _batch_shingle_hashes
 

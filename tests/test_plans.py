@@ -278,3 +278,63 @@ def test_lineage_restart_reads_manifest_not_table(spark, tmp_path, monkeypatch):
     fresh.record_stage(spark, 8, "diff", None)
     fresh.commit_seq(spark, 8, {"state": None, "index": None})
     assert fresh.last_committed(spark) == 8
+
+
+def test_commit_requires_loaded_committed_cache(spark, tmp_path, monkeypatch):
+    """A commit on a log whose committed-seq cache never loaded must fail
+    loudly, not persist an empty ``committed_ranges`` summary that a
+    restart would then trust."""
+    from augdiff_pipeline_spark.plans.lineage import LineageLog
+
+    path = str(tmp_path / "log")
+    log = LineageLog(path, save_interval=1, keep_snapshots=4)
+    log.commit_seq(spark, 1, {"state": None, "index": None})
+    resumed = LineageLog(path, save_interval=1, keep_snapshots=4)
+    n_snaps = len(resumed.lineage.snapshots())
+    monkeypatch.setattr(resumed, "committed_seqs", lambda spark: [])
+    with pytest.raises(AssertionError, match="committed-seq cache"):
+        resumed.commit_seq(spark, 2, {"state": None, "index": None})
+    assert len(resumed.lineage.snapshots()) == n_snaps
+    assert LineageLog(path).committed_seqs(spark) == [1]
+
+
+def _executed_plan(df) -> str:
+    """The executed physical plan of ``df`` after running it (AQE's final
+    plan, without its initial-plan copy)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
+@pytest.mark.parametrize("label", ["node_only", "way_relation"])
+def test_feature_plan_is_one_emission_pass(spark, tmp_path, label):
+    """Each batch renders its feature lines with ONE Python kernel behind
+    at most ONE history⋈geometry join — not a per-type, per-mode fan-out
+    of point encoders, emit kernels and joins."""
+    from augdiff_pipeline_spark.operators.closure import edges_from_rows, transitive_closure
+    from augdiff_pipeline_spark.plans.augdiff import compute_batch_features
+    from augdiff_pipeline_spark.plans.lineage import LineageLog, StageTimer
+    from augdiff_pipeline_spark.sources.catalog import SnapshotTable
+
+    state = StateTable(str(tmp_path / "state"))
+    index = SnapshotTable(str(tmp_path / "index"))
+    log = LineageLog(str(tmp_path / "log"))
+    base = fixtures.base_state_df(spark)
+    state.init(base)
+    index.overwrite(transitive_closure(edges_from_rows(base)))
+    if label == "node_only":
+        # a new node nothing references: the batch's scope is nodes only
+        batch = fixtures.change_batch_df(spark, 0).filter(F.col("id") == 1100)
+    else:
+        # a moved inner-ring corner: dirties a way and its multipolygon
+        batch = fixtures.change_batch_df(spark, 3)
+    feats, _, _ = compute_batch_features(
+        spark, state, index, batch.localCheckpoint(eager=True), StageTimer(log, spark, 0)
+    )
+    plan = _executed_plan(feats)
+    kernels = plan.count("MapInPandas") + plan.count("MapInArrow")
+    joins = plan.count("Join")
+    assert kernels == 1, plan
+    assert joins <= 1, plan
